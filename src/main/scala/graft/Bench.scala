@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: times the headline queries on SPARK_GRAFT_SF_DIR and
   * prints one JSON line. Each query is forced end-to-end with a noop
   * write (full plan execution, no driver collect, no agg-pushdown
@@ -10,17 +8,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.int96RebaseModeInRead", "CORRECTED")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = Harness.session("graft-bench", cpus)
     spark.sparkContext.setLogLevel("WARN")
 
     // Warm the JVM + parquet footers once (session init dominates
@@ -32,16 +21,13 @@ object Bench {
       try Tables.load(spark, sfDir, n).schema
       catch { case e: Throwable => System.err.println(s"[bench] warmup $n: $e") }
     }
-    try SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
+    try Harness.force(SparkEntry.entry(spark))
     catch { case e: Throwable => System.err.println(s"[bench] warmup entry: $e") }
 
-    // three passes per query, report the MEDIAN: pass 1 pays one-time
-    // codegen compilation + AQE statistics, passes 2-3 are the
-    // steady-state throughput a long-running cluster job sees, and the
-    // median discards BOTH the cold outlier and a single shared-sandbox
-    // hiccup — the round-9 archive carried 2-5× noise spikes a
-    // min(cold, warm) pair could not distinguish from regressions.
-    // A query that throws reports -1, not a meaningless elapsed time.
+    // three passes per query, report the MEDIAN (BenchMath.rep3): the
+    // round-9 archive carried 2-5× noise spikes a min(cold, warm) pair
+    // could not distinguish from regressions. A query that throws
+    // reports -1, not a meaningless elapsed time.
     // Optional comma-separated headline filter for focused iteration
     // (SPARK_GRAFT_BENCH_ONLY=q98_dup_spans,q100_ann_ivfpq); the
     // driver never sets it, so the round bench always runs everything.
@@ -54,64 +40,43 @@ object Bench {
     val picked = only.fold(SparkEntry.headlines)(names =>
       SparkEntry.headlines.filter(q => names(q.name)))
       .filterNot(q => split(q.name) && only.isEmpty)
-    import BenchMath.{median3, spread3}
+    import BenchMath.{loadavg, rep3}
     // (name, median, rep spread)
     def runAll(): Seq[(String, Double, Double)] = {
       val results = picked.map { q =>
-        def once(): Double = {
-          val t0 = System.nanoTime()
-          try {
-            q.fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-            (System.nanoTime() - t0) / 1e9
-          } catch {
-            case e: Throwable => System.err.println(s"[bench] ${q.name}: $e"); -1.0
-          }
-        }
-        val (a, b, c) = (once(), once(), once())
-        (q.name, median3(a, b, c), spread3(a, b, c))
+        val (med, sp) = rep3(s"[bench] ${q.name}")(Harness.force(q.fn(spark, sfDir)))
+        (q.name, med, sp)
       }
 
       // Build/probe split for the ANN index headliners: the build is
       // forced via localCheckpoint (the local stand-in for staging the
       // index partitionBy(cell) at scale), then probes run against the
       // materialized artifact. median-of-3 convention as above.
-      def timed(f: => Unit): Double = {
-        val t0 = System.nanoTime()
-        try { f; (System.nanoTime() - t0) / 1e9 }
-        catch { case e: Throwable => System.err.println(s"[bench] split: $e"); -1.0 }
-      }
-      def rep3(f: () => Double): (Double, Double) = {
-        val (a, b, c) = (f(), f(), f())
-        (median3(a, b, c), spread3(a, b, c))
-      }
       val splitResults: Seq[(String, Double, Double)] =
         if (only.nonEmpty) Seq.empty
         else {
           var pq: org.apache.spark.sql.DataFrame = null
-          val b85 = rep3(() => timed {
+          val b85 = rep3("[bench] split") {
             pq = operators.AnnOps.pqIndex(spark, sfDir).localCheckpoint()
-          })
-          val p85 = rep3(() => timed {
-            operators.AnnOps.pqProbe(spark, sfDir, pq)
-              .write.format("noop").mode("overwrite").save()
-          })
+          }
+          val p85 = rep3("[bench] split") {
+            Harness.force(operators.AnnOps.pqProbe(spark, sfDir, pq))
+          }
           var ivfpq: org.apache.spark.sql.DataFrame = null
-          val b100 = rep3(() => timed {
+          val b100 = rep3("[bench] split") {
             ivfpq = operators.AnnOps.ivfpqIndex(spark, sfDir).localCheckpoint()
-          })
-          val p100 = rep3(() => timed {
-            operators.AnnOps.ivfpqProbe(spark, sfDir, ivfpq)
-              .write.format("noop").mode("overwrite").save()
-          })
+          }
+          val p100 = rep3("[bench] split") {
+            Harness.force(operators.AnnOps.ivfpqProbe(spark, sfDir, ivfpq))
+          }
           var sq8: (org.apache.spark.sql.DataFrame, Seq[Double], Seq[Double]) = null
-          val b117 = rep3(() => timed {
+          val b117 = rep3("[bench] split") {
             val (c, mn, sc) = operators.AnnOps.sq8Index(spark, sfDir)
             sq8 = (c.localCheckpoint(), mn, sc)
-          })
-          val p117 = rep3(() => timed {
-            operators.AnnOps.sq8Probe(spark, sfDir, sq8._1, sq8._2, sq8._3)
-              .write.format("noop").mode("overwrite").save()
-          })
+          }
+          val p117 = rep3("[bench] split") {
+            Harness.force(operators.AnnOps.sq8Probe(spark, sfDir, sq8._1, sq8._2, sq8._3))
+          }
           Seq(("q85_ann_pq_build", b85._1, b85._2),
             ("q85_ann_pq_probe", p85._1, p85._2),
             ("q100_ann_ivfpq_build", b100._1, b100._2),
@@ -121,11 +86,6 @@ object Bench {
         }
       results ++ splitResults
     }
-
-    def loadavg(): Double =
-      try java.nio.file.Files.readString(
-        java.nio.file.Paths.get("/proc/loadavg")).split(" ")(0).toDouble
-      catch { case _: Throwable => -1.0 }
 
     val spreadLimit =
       sys.env.getOrElse("SPARK_GRAFT_SPREAD_LIMIT", "1.5").toDouble

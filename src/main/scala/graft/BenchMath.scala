@@ -1,6 +1,7 @@
 package graft
 
-/** The bench's measurement arithmetic, extracted so the contention
+/** The harnesses' shared timing loop (Bench, ScaleBench, Scratch) and
+  * the bench's measurement arithmetic, extracted so the contention
   * detector is unit-testable — round 12's artifact of record silently
   * recorded a phantom 25% regression because this logic (then a
   * q01-envelope check only) could not see mid-run contention; the
@@ -9,6 +10,33 @@ package graft
   * Row shape throughout: (query name, median seconds, warm-rep spread).
   */
 private[graft] object BenchMath {
+
+  /** Seconds `body` takes; −1 when it throws (printed to stderr as
+    * `<label>: <error>`), so a broken query costs its own number, not
+    * the run's. */
+  def timed(label: => String)(body: => Unit): Double = {
+    val t0 = System.nanoTime()
+    try { body; (System.nanoTime() - t0) / 1e9 }
+    catch { case e: Throwable => System.err.println(s"$label: $e"); -1.0 }
+  }
+
+  /** `n` timed reps of `body`, in order. */
+  def reps(n: Int, label: => String)(body: => Unit): Seq[Double] =
+    Seq.fill(n)(timed(label)(body))
+
+  /** Three timed reps as (median, warm-rep spread): rep 1 pays the
+    * one-time codegen + AQE statistics, reps 2-3 are steady state, and
+    * the median discards both the cold outlier and a single hiccup. */
+  def rep3(label: => String)(body: => Unit): (Double, Double) = {
+    val ts = reps(3, label)(body)
+    (median3(ts(0), ts(1), ts(2)), spread3(ts(0), ts(1), ts(2)))
+  }
+
+  /** The 1-minute load average; −1 when it cannot be read. */
+  def loadavg(path: String = "/proc/loadavg"): Double =
+    try java.nio.file.Files.readString(java.nio.file.Paths.get(path))
+      .split(" ")(0).toDouble
+    catch { case _: Throwable => -1.0 }
 
   /** Median of the 3 reps; any errored rep (−1) poisons the query. */
   def median3(a: Double, b: Double, c: Double): Double =

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Plan auditor: dumps `.explain("formatted")` for every headline query
@@ -11,14 +10,7 @@ import java.nio.file.{Files, Paths}
 object Plans {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-plans")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Harness.session("graft-plans", 8)
     spark.sparkContext.setLogLevel("ERROR")
 
     val sb = new StringBuilder
@@ -486,7 +478,7 @@ object Plans {
     val pid = plan.replaceAll("plan_id=\\d+", "plan_id=X")
     val lam = pid
       .replaceAll("\\$\\$Lambda\\$?\\d*/0x[0-9a-fA-F]+(@[0-9a-fA-F]+)?", "\\$\\$LAMBDA")
-      .replaceAll("Lambda\\$\\d+/0x[0-9a-fA-F]+(@[0-9a-fA-F]+)?", "LAMBDA")
+      .replaceAll("Lambda\\$?\\d*/(0x[0-9a-fA-F]+|\\d+)(@[0-9a-fA-F]+)?", "LAMBDA")
     val ids = scala.collection.mutable.LinkedHashMap[String, Int]()
     val re = "#(\\d+)".r
     re.findAllMatchIn(lam).foreach(m => ids.getOrElseUpdate(m.group(1), ids.size + 1))

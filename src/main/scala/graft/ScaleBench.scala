@@ -147,24 +147,16 @@ object ScaleBench {
         val defaults = if (corpus == "heaps") HeapsTier else Heavy
         if (includeN2) defaults else defaults.filterNot(_ == "q130_knn_graph")
       }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-scale-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // the production posture: every banded-dedup query reads its
-      // family's q239 gate before paying for the band join, so a
-      // content- or family-saturated scale point records a refusal
-      // (DNF-by-gate, with the [scale] preflight line giving the
-      // projected density) instead of an hour of thrash — exactly
-      // what a 100 TB operator would do.
-      .config("spark.graft.dedup.preflight", "true")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = Harness.session("graft-scale-bench", cpus)
     spark.sparkContext.setLogLevel("WARN")
+    // the production posture: every banded-dedup query reads its
+    // family's q239 gate before paying for the band join, so a
+    // content- or family-saturated scale point records a refusal
+    // (DNF-by-gate, with the [scale] preflight line giving the
+    // projected density) instead of an hour of thrash — exactly
+    // what a 100 TB operator would do.
+    spark.conf.set("spark.graft.dedup.preflight", "true")
 
     // Third decade opt-in via SPARK_GRAFT_SCALES=x1,x10,x100 — the
     // default stays the cheap pair so iterating stays fast. At x100
@@ -290,26 +282,13 @@ object ScaleBench {
         s"containDropped=${sm.containmentDropped}")
       out
     }
-    def once(name: String, dir: String): Double = {
-      val t0 = System.nanoTime()
-      try {
-        val df = if (name == "knn_graph_ivf") knnIvf(dir)
-          else if (name == "knn_graph_ivf2") knnIvf2(dir)
-          else if (name == "knn_graph_bal") knnBal(dir)
-          else if (name == "curation_ladder") curation(dir, contain = false)
-          else if (name == "curation_contain") curation(dir, contain = true)
-          else qs(name)(spark, dir)
-        df.write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      } catch {
-        case e: Throwable =>
-          System.err.println(s"[scale] $name @ $dir: $e"); -1.0
-      }
-    }
-    def loadavg(): Double =
-      try java.nio.file.Files.readString(
-        java.nio.file.Paths.get("/proc/loadavg")).split(" ")(0).toDouble
-      catch { case _: Throwable => -1.0 }
+    def frame(name: String, dir: String): DataFrame =
+      if (name == "knn_graph_ivf") knnIvf(dir)
+      else if (name == "knn_graph_ivf2") knnIvf2(dir)
+      else if (name == "knn_graph_bal") knnBal(dir)
+      else if (name == "curation_ladder") curation(dir, contain = false)
+      else if (name == "curation_contain") curation(dir, contain = true)
+      else qs(name)(spark, dir)
     // Load-robustness fields, the Bench r13 treatment applied to the
     // scale artifact (SCALE.md admits x100 absolutes swing 2-4x across
     // sessions — a judge must be able to adjudicate a point WITHOUT
@@ -324,11 +303,10 @@ object ScaleBench {
         ":" + java.lang.management.ManagementFactory.getRuntimeMXBean.getStartTime
     // (median, spread, loadBefore, loadAfter) per point
     def point3(name: String, dir: String): (Double, Double, Double, Double) = {
-      val lb = loadavg()
-      val ts = Seq(once(name, dir), once(name, dir), once(name, dir))
-      val la = loadavg()
-      (BenchMath.median3(ts(0), ts(1), ts(2)),
-        BenchMath.spread3(ts(0), ts(1), ts(2)), lb, la)
+      val lb = BenchMath.loadavg()
+      val (med, sp) = BenchMath.rep3(s"[scale] $name @ $dir")(
+        Harness.force(frame(name, dir)))
+      (med, sp, lb, BenchMath.loadavg())
     }
 
     val rows = picked.map { name =>

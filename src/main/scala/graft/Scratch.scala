@@ -1,17 +1,27 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 
 /** Profiling harness (dev-only, kept in-tree so perf work is
   * reproducible): times named queries N times each in one JVM to beat
   * inter-invocation variance.
   *
-  * SPARK_GRAFT_STAGES=true   per-stage attribution for the warm rep
-  *   (task-time, shuffle bytes per stage — the local stand-in for the
-  *   Spark UI's stage table, guide §1.1/§7.1).
+  * Usage: runMain graft.Scratch q1 [q2 ...]
+  *
+  * SPARK_GRAFT_SF_DIR=<dir>  data directory (default sf0.1)
+  * SPARK_GRAFT_REPS=<n>      reps per query (default 5)
+  * SPARK_GRAFT_CPUS=<n>      local cores and shuffle partitions (default 32)
+  * SPARK_GRAFT_STAGES=true   per-stage attribution for the last rep
+  *   (task time, CPU, shuffle and spill bytes per stage, named by the
+  *   engine call site — the local stand-in for the Spark UI's stage
+  *   table, guide §1.1/§7.1). This is the engine's one per-operator
+  *   phase facility: it reads listener metrics and never re-runs a
+  *   frame.
   * SPARK_GRAFT_EXPLAIN=<dir> writes <dir>/<query>.txt with the
   *   formatted physical plan (the plans/rNN before/after artifacts).
+  * SPARK_GRAFT_CONFS=k=v,... extra runtime confs, e.g.
+  *   SPARK_GRAFT_CONFS=spark.graft.stagingDir=/tmp/stage to time the
+  *   durable-staging configuration.
   */
 object Scratch {
   /** Collects per-stage task metrics; cleared between reps. */
@@ -52,19 +62,10 @@ object Scratch {
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "5").toInt
     // core-count knob (r17): the q107 flatness attribution needs the
     // SAME stage tap at two core counts — mirrors the Bench contract
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-scratch")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = Harness.session("graft-scratch", cpus)
     spark.sparkContext.setLogLevel("WARN")
-    // extra runtime confs for diagnostics sessions, e.g.
-    // SPARK_GRAFT_CONFS=spark.graft.contain.debug=true,spark.graft.suffix.debug=true
+    // extra runtime confs (SPARK_GRAFT_CONFS, see the header)
     sys.env.get("SPARK_GRAFT_CONFS").foreach(_.split(",").filter(_.nonEmpty)
       .foreach { kv =>
         val Array(k, v) = kv.split("=", 2)
@@ -78,7 +79,7 @@ object Scratch {
       catch { case scala.util.control.NonFatal(e) =>
         println(s"SCRATCH skip table $n: ${e.getClass.getSimpleName}") }
     }
-    try SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
+    try Harness.force(SparkEntry.entry(spark))
     catch { case scala.util.control.NonFatal(e) =>
       println(s"SCRATCH skip entry warm-up: ${e.getClass.getSimpleName}") }
     val byName = SparkEntry.registry.map(q => q.name -> q).toMap
@@ -95,11 +96,11 @@ object Scratch {
           org.apache.spark.sql.execution.FormattedMode)
         java.nio.file.Files.writeString(p.resolve(s"$n.txt"), plan)
       }
-      val ts = (1 to reps).map { i =>
-        if (i == reps) tap.foreach(_.clear())
-        val t0 = System.nanoTime()
-        q.fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
+      def run(): Unit = Harness.force(q.fn(spark, sfDir))
+      // the tap keeps the last rep's stages only
+      val ts = BenchMath.reps(reps - 1, s"SCRATCH $n")(run()) :+ {
+        tap.foreach(_.clear())
+        BenchMath.timed(s"SCRATCH $n")(run())
       }
       println(f"SCRATCH $n min=${ts.min}%.3f med=${ts.sorted.apply(reps / 2)}%.3f all=${ts.map(t => f"$t%.2f").mkString(",")}")
       tap.foreach(_.dump())

@@ -3,15 +3,15 @@ package graft
 import org.apache.spark.sql.DataFrame
 
 /** The durable-staging materialization seam shared by every multi-pass
-  * operator tier (dedup, corpus, LM, workflow).
+  * operator tier (dedup, corpus, LM, ANN, events, workflow).
   *
   * Default (local mode): `localCheckpoint` — fast, but pinned to
-  * executors, so a lost executor kills the job. Durable mode (the
-  * tier's staging conf key set to a parquet-capable path): write-then-
-  * read a staged table, so any lost task recomputes from the staged
-  * files — the configuration a 100 TB run uses (SCALE.md). One
-  * implementation here so a change to the seam (cleanup policy, conf
-  * plumbing) cannot silently diverge between tiers.
+  * executors, so a lost executor kills the job. Durable mode
+  * (`spark.graft.stagingDir` set to a parquet-capable path): write-
+  * then-read a staged table, so any lost task recomputes from the
+  * staged files — the configuration a 100 TB run uses (SCALE.md). One
+  * implementation and one key, so a change to the seam (cleanup
+  * policy, conf plumbing) cannot silently diverge between tiers.
   *
   * Cleanup policy: every staged directory this process writes is
   * tracked; call [[cleanup]] once the run's OUTPUTS have been consumed
@@ -24,19 +24,28 @@ import org.apache.spark.sql.DataFrame
   */
 object Staging {
 
+  /** The durable-staging root; unset means local mode. */
+  private val Key = "spark.graft.stagingDir"
+
   private val staged = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
-  def materialize(df: DataFrame, tag: String, confKey: String): DataFrame = {
-    val s = df.sparkSession
-    s.conf.getOption(confKey) match {
-      case Some(root) =>
-        val path = s"$root/${tag}_${java.util.UUID.randomUUID().toString.take(8)}"
+  def materialize(df: DataFrame, tag: String): DataFrame =
+    stagedPath(df.sparkSession, tag) match {
+      case Some(path) =>
         df.write.mode("overwrite").parquet(path)
-        staged.add(path)
-        s.read.parquet(path)
+        df.sparkSession.read.parquet(path)
       case None => df.localCheckpoint()
     }
-  }
+
+  /** A fresh tracked directory `<root>/<tag>_<uuid8>` under the staging
+    * root, or None in local mode — for stages that write their own
+    * layout (e.g. AnnOps' partitioned IVF index). */
+  def stagedPath(s: org.apache.spark.sql.SparkSession, tag: String): Option[String] =
+    s.conf.getOption(Key).map { root =>
+      val path = s"$root/${tag}_${java.util.UUID.randomUUID().toString.take(8)}"
+      staged.add(path)
+      path
+    }
 
   /** Paths staged (durable mode) by this process and not yet cleaned. */
   def stagedPaths: Set[String] = {

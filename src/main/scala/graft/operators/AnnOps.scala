@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   *
   * Index build: pick C centroids (deterministic here: vec_id < C; k-means
   * at scale), assign every vector to its nearest centroid — a narrow map
-  * over a broadcast centroid table. With `spark.graft.ann.stagingDir`
+  * over a broadcast centroid table. With `spark.graft.stagingDir`
   * set, the assignment is written `partitionBy(cell)` and the probe
   * becomes partition-PRUNED I/O: only the `nprobe` cell directories are
   * listed and read, so a 100 TB index pays ~nprobe/C of the scan.
@@ -116,11 +116,11 @@ object AnnOps {
         .select(col("vec_id").as("cid"), col("embedding").as("cv"))
       val qv = e.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
 
-      s.conf.getOption("spark.graft.ann.stagingDir") match {
-        case Some(root) =>
+      graft.Staging.stagedPath(s, "ivf_index") match {
+        case Some(staged) =>
           // staged path: partitionBy(cell) index + literal in-set probe →
           // the parquet scan prunes to nprobe of C cell directories
-          val path = buildIvfIndex(e, centroids, s"$root/ivf_index")
+          val path = buildIvfIndex(e, centroids, staged)
           val cents = centroids.collect().map(r =>
             (r.getLong(0), r.getSeq[Float](1).toArray))
           val q = e.filter(col("vec_id") === 0).select(col("embedding"))
@@ -1065,7 +1065,7 @@ object AnnOps {
     (1 to iters).foreach { t =>
       pr = graft.Staging.materialize(
         pageRankRound(nodes, edges, pr, outDeg, damp, n),
-        s"pagerank$t", "spark.graft.ann.stagingDir")
+        s"pagerank$t")
     }
     pr
   }
@@ -1102,7 +1102,7 @@ object AnnOps {
         val edges = graft.Staging.materialize(
           knnGraphExact(e, GraphK)
             .select(col("vec_id").as("src"), col("nbr_id").as("dst")),
-          "knn_edges", "spark.graft.ann.stagingDir")
+          "knn_edges")
         val nodes = e.select(col("vec_id").as("id"))
         pageRank(nodes, edges, GraphK, iters, damp)
           .select(col("id").as("vec_id"),
@@ -1410,7 +1410,7 @@ object AnnOps {
           .withColumn("rk", row_number().over(wqWindow).cast("long"))
           .filter(col("rk") <= NswEf)
           .select(col("qid"), col("vid"), col("cos")),
-        s"${tag}_beam$r", "spark.graft.ann.stagingDir")
+        s"${tag}_beam$r")
     }
     beam
   }
@@ -1552,7 +1552,7 @@ object AnnOps {
         knnGraphExact(e, GraphK).select(col("vec_id"), col("nbr_id"))
           .unionByName(hashPositionLinks(e, NswLong, ":")).distinct()
           .select(col("vec_id").as("evid"), col("nbr_id")),
-        "nsw_edges", "spark.graft.ann.stagingDir")
+        "nsw_edges")
       val queries = nswQueries(e)
       // entry: the smallest id that is not the query itself
       val small = e.select(col("vec_id")).orderBy(col("vec_id"))
@@ -1639,7 +1639,7 @@ object AnnOps {
           .withColumn("rk", row_number().over(wk).cast("long"))
           .filter(col("rk") <= GraphK)
           .select(col("vec_id"), col("nbr_id")),
-        "nnd_init", "spark.graft.ann.stagingDir")
+        "nnd_init")
       val exact = knnGraphExact(e, GraphK)
         .select(col("vec_id"), col("nbr_id")).localCheckpoint()
       val nEdgesExact = exact.count().toDouble
@@ -1664,7 +1664,7 @@ object AnnOps {
             .withColumn("rk", row_number().over(wk).cast("long"))
             .filter(col("rk") <= GraphK)
             .select(col("vec_id"), col("nbr_id")),
-          s"nnd_round$r", "spark.graft.ann.stagingDir")
+          s"nnd_round$r")
         curve += ((r.toLong, recallOf(graph)))
       }
       import scala.jdk.CollectionConverters._
@@ -1790,7 +1790,7 @@ object AnnOps {
           .filter(col("vec_id") =!= col("nbr_id"))
           .select(col("vec_id"), col("nbr_id"),
             round(expr("dot_product_f(embedding, nvec)"), 6).as("cos")),
-        "hnsw_pairs", "spark.graft.ann.stagingDir")
+        "hnsw_pairs")
       val wk = Window.partitionBy(col("vec_id"))
         .orderBy(col("cos").desc, col("nbr_id"))
       def layerEdges(k: Int): DataFrame = pairs
@@ -1812,7 +1812,7 @@ object AnnOps {
       var cur: DataFrame = entry
       (HnswMaxLevel to 1 by -1).foreach { k =>
         val ek = graft.Staging.materialize(layerEdges(k),
-          s"hnsw_l$k", "spark.graft.ann.stagingDir")
+          s"hnsw_l$k")
         (1 to HnswSteps).foreach { st =>
           val cand = cur.select(col("qid"), col("vid"))
             .unionByName(cur.join(ek, col("vid") === col("evid"))
@@ -1823,12 +1823,12 @@ object AnnOps {
               .withColumn("rk", row_number().over(wqWindow))
               .filter(col("rk") === 1)
               .select(col("qid"), col("vid")),
-            s"hnsw_c${k}_$st", "spark.graft.ann.stagingDir")
+            s"hnsw_c${k}_$st")
         }
       }
       // layer 0: the shared beam from the descended entry
       val e0 = graft.Staging.materialize(layerEdges(0),
-        "hnsw_l0", "spark.graft.ann.stagingDir")
+        "hnsw_l0")
       beamAudit(beamSearch(cur, e0, e, queries, "hnsw"), e, queries)
     },
     Some {

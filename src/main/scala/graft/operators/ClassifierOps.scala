@@ -345,7 +345,7 @@ object ClassifierOps {
         import s.implicits._
         val feat = graft.Staging.materialize(
           probeFeatures(Tables.loadParallel(s, dir, "documents")),
-          "probe_feat", "spark.graft.corpus.stagingDir")
+          "probe_feat")
         var w = Array(0L, 0L, 0L, 0L, 0L)
         val traj = scala.collection.mutable.ArrayBuffer
           .empty[(Int, Double, Double, Double, Double, Double)]

@@ -65,22 +65,13 @@ object DedupOps {
 
   private val shingleSqlCte = shingleSqlCteFor("documents")
 
-  /** Materialize a frame reused across several joins. Default (local
-    * mode): localCheckpoint — fast, but pinned to executors, so a lost
-    * executor kills the job. Durable mode (`spark.graft.dedup.stagingDir`
-    * set to a parquet-capable path): write-then-read a staged table, so
-    * any lost task recomputes from the staged files — the configuration
-    * a 100 TB run uses (SCALE.md). */
-  private[graft] def materialize(df: DataFrame, tag: String): DataFrame =
-    graft.Staging.materialize(df, tag, "spark.graft.dedup.stagingDir")
-
   /** MinHash signatures: ONE sha256 per shingle; the K hash functions
     * are the K disjoint 8-hex-char slices of the digest (256 independent
     * bits buy 8 independent 32-bit permutations for one hash pass —
     * 8× cheaper than hashing per-permutation). Signature entry k is the
     * lexicographic min of slice k. */
   private def hashedOf(sh: DataFrame, tag: String): DataFrame =
-    materialize(sh
+    graft.Staging.materialize(sh
       .select(col("doc_id"),
         expr("transform(shingles, s -> sha2(s, 256))").as("hashes")), tag)
 
@@ -166,7 +157,7 @@ object DedupOps {
       // join (the q245 800 GB lesson, applied to its own family).
       // left_outer: a band collision with zero true overlap is still a
       // candidate row (jaccard 0), as before.
-      val pairs = materialize(lshCandidatePairs(signatures(hashed)), "q51_cand")
+      val pairs = graft.Staging.materialize(lshCandidatePairs(signatures(hashed)), "q51_cand")
       val sizes = hashed.select(col("doc_id"),
         size(col("hashes")).cast("long").as("n"))
       pairs
@@ -229,7 +220,7 @@ object DedupOps {
       preflightGuard(s, dir, "minhash")
       val hashed = hashedShingles(s, dir)
       // slim verify through the inverted index — see q51's note
-      val pairs = materialize(lshCandidatePairs(signatures(hashed)), "q241_cand")
+      val pairs = graft.Staging.materialize(lshCandidatePairs(signatures(hashed)), "q241_cand")
       val sizes = hashed.select(col("doc_id"),
         size(col("hashes")).cast("long").as("n"))
       pairs
@@ -732,7 +723,7 @@ object DedupOps {
 
   private[operators] def simhashPairs(s: SparkSession, dir: String): DataFrame = {
     preflightGuard(s, dir, "simhash")
-    simhashPairsOf(materialize(packedSimhash(s, dir), "simhash"))
+    simhashPairsOf(graft.Staging.materialize(packedSimhash(s, dir), "simhash"))
   }
 
   val q90SimhashHamming: QueryDef = QueryDef(
@@ -863,13 +854,13 @@ object DedupOps {
     * left join. Converges in O(component diameter) rounds. */
   private[operators] def minLabelComponents(pairs: DataFrame,
       maxRounds: Int = 20): DataFrame = {
-    val edges = materialize(
+    val edges = graft.Staging.materialize(
       pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
         .unionByName(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst"))),
       "edges")
     // working set: edge endpoints only (src already carries both
     // directions after the union above)
-    var labels = materialize(edges
+    var labels = graft.Staging.materialize(edges
       .select(col("src").as("id")).distinct()
       .withColumn("label", col("id")), "labels0")
     var changed = true
@@ -881,7 +872,7 @@ object DedupOps {
       val msgs = edges
         .join(labels.withColumnRenamed("id", "src"), "src")
         .groupBy(col("dst").as("id")).agg(min(col("label")).as("m"))
-      val next = materialize(
+      val next = graft.Staging.materialize(
         labels.withColumnRenamed("label", "old")
           .join(msgs, Seq("id"), "left_outer")
           .withColumn("label", least(col("old"), coalesce(col("m"), col("old"))))
@@ -1027,7 +1018,7 @@ object DedupOps {
 
   private[operators] def simhash128Pairs(s: SparkSession, dir: String): DataFrame = {
     preflightGuard(s, dir, "simhash128")
-    simhash128PairsOf(materialize(packedSimhash128Of(docs(s, dir)), "simhash128"))
+    simhash128PairsOf(graft.Staging.materialize(packedSimhash128Of(docs(s, dir)), "simhash128"))
   }
 
   /** Shared q242 oracle CTEs — the 128-bit string replay. */
@@ -1119,7 +1110,7 @@ object DedupOps {
 
   private[operators] def mankuPairs(s: SparkSession, dir: String): DataFrame = {
     preflightGuard(s, dir, "manku64")
-    mankuPairsOf(materialize(packedSimhash(s, dir), "manku_sig"))
+    mankuPairsOf(graft.Staging.materialize(packedSimhash(s, dir), "manku_sig"))
   }
 
   /** The oracle's table list rendered as VALUES rows from the SAME
@@ -1202,15 +1193,6 @@ object DedupOps {
     * verify counts shared hashes THROUGH the inverted index
     * (co-occurrence triples grouped per pair) — set arrays never
     * cross a shuffle (see [[containmentRecallOf]]). */
-  /** Perf diagnostics for the containment family
-    * (`spark.graft.contain.debug=true`): per-stage wall laps at the
-    * materialize boundaries plus the intrinsic row masses (candidate
-    * pairs, inverted-index incidences) — the numbers a closure
-    * adjudication needs. Debug-only counts re-run their frames;
-    * production paths never pay them. */
-  private def containDbg(s: org.apache.spark.sql.SparkSession): Boolean =
-    s.conf.getOption("spark.graft.contain.debug").contains("true")
-
   private[graft] def containProbes(hashed: DataFrame,
       tau: Double = ContainTauDefault): DataFrame =
     hashed.select(col("doc_id").as("small_id"),
@@ -1318,20 +1300,6 @@ object DedupOps {
     val incidences = ia.as("a")
       .join(ib.as("b"), col("a.h") === col("b.h") && orderPred)
       .select(col("a.doc_id").as(aName), col("b.doc_id").as(bName))
-    if (containDbg(hashed.sparkSession)) {
-      // intrinsic-mass attribution (debug recomputes these frames):
-      // the incidence count IS the Σ_h df_a·df_b mass the closure
-      // argument prices, and the candidate-restricted count is what
-      // the aggregate actually folds
-      val t0 = System.nanoTime()
-      val nInc = incidences.count()
-      val tInc = (System.nanoTime() - t0) / 1e9
-      val t1 = System.nanoTime()
-      val nRes = incidences.join(pairs, Seq(aName, bName)).count()
-      val tRes = (System.nanoTime() - t1) / 1e9
-      println(f"[contain] incidences=$nInc t=$tInc%.2fs " +
-        f"candidate-restricted=$nRes t=$tRes%.2fs")
-    }
     // `restrictHint`: the restrict join is incidences (big) ⋈ pairs;
     // when the caller's pair frame is DISTINCT-keyed (so its hash
     // partitioning has no heavy key by construction) and slim, a
@@ -1340,28 +1308,14 @@ object DedupOps {
     // as the operator's single heaviest stage); small-pair callers
     // (q51/q241) leave it None and let AQE broadcast.
     val restr = restrictHint.map(pairs.hint(_)).getOrElse(pairs)
-    // A/B seam (r16 verdict item 3): `spark.graft.contain.preagg=true`
-    // (dev flag, unset in every driver path) aggregates the incidence
-    // stream to (pair, n_common) BEFORE the restrict join — the §2.3
-    // map-side-combine lever the join-first closure never measured.
-    // Same output rows either way: grouping all co-occurring pairs and
-    // then inner-joining the candidate frame keeps exactly the rows
-    // the join-then-group form keeps. What it changes is WHERE the
-    // rows die: x100 recorded 276.7M incidences vs 273.8M distinct
-    // co-occurring pairs (pairs repeat ~1.01×), so the partial agg can
-    // collapse almost nothing and builds a 273.8M-group hash state —
-    // this flag exists to price that prediction, not to ship it.
-    if (sess.conf.getOption("spark.graft.contain.preagg").contains("true"))
-      incidences
-        .groupBy(col(aName), col(bName))
-        .agg(count(lit(1)).as("n_common"))
-        .join(restr, Seq(aName, bName))
-        .select(pairs.columns.map(col) :+ col("n_common"): _*)
-    else
-      incidences
-        .join(restr, Seq(aName, bName))
-        .groupBy(pairs.columns.map(col): _*)
-        .agg(count(lit(1)).as("n_common"))
+    // No map-side (pair, n_common) pre-aggregation: x100 recorded
+    // 276.7M incidences vs 273.8M distinct co-occurring pairs (~1.01×),
+    // so it collapses almost nothing, and it lost 1.6–4× at heaps-x100
+    // (OPTIMIZATION_r17.md item 3).
+    incidences
+      .join(restr, Seq(aName, bName))
+      .groupBy(pairs.columns.map(col): _*)
+      .agg(count(lit(1)).as("n_common"))
   }
 
   private[operators] def containmentRecallOf(hashed: DataFrame,
@@ -1373,15 +1327,11 @@ object DedupOps {
     // columns it had just projected away (SCALE.md Round 15). It is
     // also MATERIALIZED, feeding three consumers (the two per-side
     // semi-joins inside commonHashCounts and the final verify join).
-    val dbg = containDbg(hashed.sparkSession)
-    val tCand0 = System.nanoTime()
-    val cand = materialize(containProbes(hashed, tau).join(containIndex(hashed), "h")
+    val cand = graft.Staging.materialize(containProbes(hashed, tau).join(containIndex(hashed), "h")
       .filter(col("n_small") < col("n_big") ||
         (col("n_small") === col("n_big") && col("small_id") < col("big_id")))
       .select(col("small_id"), col("n_small"), col("big_id"), col("n_big"))
       .distinct(), s"${tag}_cand")
-    if (dbg) println(f"[contain] cand assembled pairs=${cand.count()} " +
-      f"t=${(System.nanoTime() - tCand0) / 1e9}%.2fs (probe⋈index + distinct)")
     // commonHashCounts is candidate-restricted and carries cand's
     // size columns through its group keys — the verify IS its output
     commonHashCounts(hashed, cand, "small_id", "big_id",
@@ -1410,14 +1360,9 @@ object DedupOps {
     * the DuckDB oracle truncates IDENTICALLY, so the comparison is
     * exact either way. The MinHash family keeps the full digest (its
     * K permutations are the digest's 8-char slices). */
-  private def hashed16Of(sh: DataFrame, tag: String): DataFrame = {
-    val t0 = System.nanoTime()
-    val out = materialize(sh.select(col("doc_id"),
+  private def hashed16Of(sh: DataFrame, tag: String): DataFrame =
+    graft.Staging.materialize(sh.select(col("doc_id"),
       expr("transform(shingles, s -> substr(sha2(s, 256), 1, 16))").as("hashes")), tag)
-    if (containDbg(sh.sparkSession))
-      println(f"[contain] hashed16 $tag t=${(System.nanoTime() - t0) / 1e9}%.2fs")
-    out
-  }
 
   private val hash16SqlCte =
     """hs AS (SELECT doc_id,
@@ -1613,14 +1558,14 @@ object DedupOps {
     * join), the same contract as [[minLabelComponents]]. */
   private[operators] def twoPhaseComponents(pairs: DataFrame,
       maxRounds: Int = 30): DataFrame = {
-    var edges = materialize(
+    var edges = graft.Staging.materialize(
       pairs.select(greatest(col("doc_a"), col("doc_b")).as("u"),
           least(col("doc_a"), col("doc_b")).as("v"))
         .filter(col("u") =!= col("v")).distinct(), "tp_edges0")
     var done = false
     var rounds = 0
     while (!done && rounds < maxRounds) {
-      val next = materialize(twoPhaseRound(edges), s"tp_edges${rounds + 1}")
+      val next = graft.Staging.materialize(twoPhaseRound(edges), s"tp_edges${rounds + 1}")
       // Convergence test = IS the frame a star forest (no edge target
       // is also a source)? A star forest is a fixed point of the
       // alternation (both star operations map it to itself) and every
@@ -1665,8 +1610,8 @@ object DedupOps {
       // fingerprints and every doc inherits its fingerprint's
       // component label. Component minima are preserved because each
       // supernode's id IS its group's min doc_id.
-      val packed = materialize(packedSimhash(s, dir), "ctr_sig")
-      val fp = materialize(fingerprintsOf(packed), "ctr_fp")
+      val packed = graft.Staging.materialize(packedSimhash(s, dir), "ctr_sig")
+      val fp = graft.Staging.materialize(fingerprintsOf(packed), "ctr_fp")
       contractedGuard(s, fp, docs(s, dir).count())
       val labels = twoPhaseComponents(
           fingerprintPairs(fp).select(col("doc_a"), col("doc_b")))
@@ -1932,7 +1877,7 @@ object DedupOps {
       "q226_source_minhash",
       (s, dir) => {
         val src = docs(s, dir).select(col("doc_id"), col("source"))
-        val grams = materialize(shingled(s, dir)
+        val grams = graft.Staging.materialize(shingled(s, dir)
           .join(src, Seq("doc_id"))
           .select(col("source"), explode(col("shingles")).as("sh"))
           .distinct(), "src_sh")
@@ -2033,7 +1978,7 @@ object DedupOps {
         val hashed = hashedOf(shingledOf(d, "policy_tok"), "policy_hashed")
         // materialized: the verify consumes the candidate frame four
         // times (count + bloom build + two semi-joins + final join)
-        val cand = materialize(lshCandidatePairs(signatures(hashed)), "policy_cand")
+        val cand = graft.Staging.materialize(lshCandidatePairs(signatures(hashed)), "policy_cand")
         val sizes = hashed.select(col("doc_id"),
           size(col("hashes")).cast("long").as("n"))
         cand.join(commonHashCounts(hashed, cand, "doc_a", "doc_b",

@@ -408,7 +408,7 @@ object EventsOps {
     "q193_retention_half_life",
     (s, dir) => {
       val ret = graft.Staging.materialize(
-        q136Retention.fn(s, dir), "retention", "spark.graft.events.stagingDir")
+        q136Retention.fn(s, dir), "retention")
       val base = ret.filter(col("day_offset") === 0L)
         .select(col("cohort_day"), col("n_users").as("n0"))
       val pts = ret.filter(col("day_offset") >= 1L)

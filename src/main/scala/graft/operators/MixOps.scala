@@ -24,12 +24,6 @@ object MixOps {
   private def docs(s: SparkSession, dir: String): DataFrame =
     Tables.loadParallel(s, dir, "documents")
 
-  /** Same durable-staging materialization seam as DedupOps/CorpusOps:
-    * localCheckpoint locally, parquet staging when
-    * `spark.graft.corpus.stagingDir` is set (the 100 TB configuration). */
-  private def materialize(df: DataFrame, tag: String): DataFrame =
-    graft.Staging.materialize(df, tag, "spark.graft.corpus.stagingDir")
-
   // ---------------------------------------------------------------
   // q92: benchmark decontamination (n-gram overlap)
   // ---------------------------------------------------------------
@@ -48,19 +42,12 @@ object MixOps {
   val q92Decontaminate: QueryDef = QueryDef(
     "q92_decontaminate",
     (s, dir) => {
-      // A/B seam (r16 verdict item 6): the r16 fused form re-splits
-      // each doc-disjoint leg's own slice (+8% wall, −26% cpu at
-      // sf0.1); `spark.graft.gram.pin=true` (dev flag, unset in every
-      // driver path) restores the checkpointed form so ScaleBench can
-      // price the trade at x10/x100 where the removed corpus-sized
-      // materialization matters. Identical rows either way — the pin
-      // only changes where the explode output lives.
-      val gramsRaw = CorpusOps.fiveGrams(s, dir)
+      // fused, not checkpointed: each doc-disjoint leg re-splits its
+      // own slice — +8% wall at sf0.1, but faster from x10 up, where
+      // the corpus-sized checkpoint costs more than the duplicated
+      // map-parallel split (OPTIMIZATION_r17.md item 6)
+      val grams = CorpusOps.fiveGrams(s, dir)
         .select(col("doc_id"), explode(col("shingles")).as("sh"))
-      val grams =
-        if (s.conf.getOption("spark.graft.gram.pin").contains("true"))
-          materialize(gramsRaw, "q92_grams")
-        else gramsRaw
       val benchGrams = grams.filter(col("doc_id") % 10 === 7)
         .select(col("sh")).distinct()
       grams.filter(col("doc_id") % 10 =!= 7)
@@ -247,7 +234,7 @@ object MixOps {
     // IEEE negation is exact, so min(-cos) = max(cos) with the same
     // min-cid tiebreak; each vector's k candidate rows collapse
     // map-side before the shuffle (the q85-encode lesson)
-    val assigned = materialize(
+    val assigned = graft.Staging.materialize(
       e.crossJoin(broadcast(cents))
         .select(col("vec_id"), col("embedding"), col("cid"),
           (-expr("dot_product_f(embedding, cvec)")).as("negcos"))
@@ -328,7 +315,7 @@ object MixOps {
       val cents = e.filter(col("vec_id") < Cents)
         .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
       // same partial-aggregatable argmax as semDedup's assignment
-      val assigned = materialize(
+      val assigned = graft.Staging.materialize(
         e.crossJoin(broadcast(cents))
           .select(col("vec_id"), col("cid"),
             (-expr("dot_product_f(embedding, cvec)")).as("negcos"))
@@ -447,7 +434,7 @@ object MixOps {
     "q122_source_overlap",
     (s, dir) => {
       val d = docs(s, dir)
-      val grams = materialize(
+      val grams = graft.Staging.materialize(
         CorpusOps.fiveGramsOf(d)
           .join(d.select(col("doc_id"), col("source")), Seq("doc_id"))
           .select(col("source"), explode(col("shingles")).as("sh"))

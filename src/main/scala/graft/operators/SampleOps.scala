@@ -125,7 +125,7 @@ object SampleOps {
       // handling still splits a mass-duplicated cluster at scale.
       val hashed = graft.Staging.materialize(
         d.select(col("doc_id"), sha2(col("text"), 256).as("h")),
-        "q116_hashed", "spark.graft.corpus.stagingDir")
+        "q116_hashed")
       val sizes = hashed.groupBy(col("h")).agg(count(lit(1)).as("grp_size"))
       hashed.join(sizes, Seq("h"))
         .select(col("doc_id"), col("grp_size"),

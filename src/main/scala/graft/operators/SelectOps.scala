@@ -66,8 +66,7 @@ object SelectOps {
   val q203KCenterCoreset: QueryDef = QueryDef(
     "q203_kcenter_coreset",
     (s, dir) => {
-      val qm = graft.Staging.materialize(quantized(s, dir), "kcenter_q",
-        "spark.graft.corpus.stagingDir")
+      val qm = graft.Staging.materialize(quantized(s, dir), "kcenter_q")
       // seed: min vec_id (struct ordering: vec_id first)
       val seedRow = qm.agg(min(struct(col("vec_id"), col("q"))).as("w"))
         .head.getStruct(0)
@@ -230,7 +229,7 @@ object SelectOps {
             explode(split(lower(trim(col("text"))), "\\s+")).as("word"))
           .groupBy(col("doc_id"), col("word"))
           .agg(count(lit(1)).as("tf")),
-        "submod_tf", "spark.graft.corpus.stagingDir")
+        "submod_tf")
       def q(x: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
         floor(sqrt(x.cast("double")) * SqrtScale + 0.5).cast("long")
       val state = scala.collection.mutable.Map.empty[String, Long]

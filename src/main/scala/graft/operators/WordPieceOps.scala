@@ -27,9 +27,6 @@ import org.apache.spark.sql.functions._
   */
 object WordPieceOps {
 
-  private def materialize(df: DataFrame, tag: String): DataFrame =
-    graft.Staging.materialize(df, tag, "spark.graft.corpus.stagingDir")
-
   private val NMerges = 8
   val Unk = "[UNK]"
 
@@ -46,7 +43,7 @@ object WordPieceOps {
 
   /** (word, freq, syms) — the WordPiece training table. */
   private def wordTable(d: DataFrame): DataFrame =
-    materialize(words(d)
+    graft.Staging.materialize(words(d)
       .groupBy(col("word")).agg(count(lit(1)).as("freq"))
       .withColumn("syms", wpSyms), "wp_words")
 
@@ -95,7 +92,7 @@ object WordPieceOps {
       out += ((l, r, merged, top(0).getAs[Double]("score")))
       round += 1
       if (round < n)
-        cur = materialize(cur.withColumn("syms",
+        cur = graft.Staging.materialize(cur.withColumn("syms",
           TokenizerOps.mergeFoldColTo(col("syms"), lit(l), lit(r), lit(merged))),
           s"wp_round$round")
     }

@@ -48,4 +48,27 @@ class BenchMathSpec extends AnyFunSuite {
     assert(BenchMath.cleaner(clean, cleanFast, 1.2, 1.5) === cleanFast)
     assert(BenchMath.cleaner(cleanFast, clean, 1.2, 1.5) === cleanFast)
   }
+
+  test("reps makes exactly n calls, one time per call") {
+    var calls = 0
+    val ts = BenchMath.reps(4, "[spec]") { calls += 1 }
+    assert(calls === 4)
+    assert(ts.size === 4 && ts.forall(_ >= 0.0))
+  }
+
+  test("a throwing rep reports -1 and poisons the median") {
+    var calls = 0
+    val (med, spread) = BenchMath.rep3("[spec]") {
+      calls += 1
+      if (calls == 2) throw new IllegalStateException("rep 2 fails")
+    }
+    assert(calls === 3, "a failed rep must not stop the later ones")
+    assert(med === -1.0)
+    assert(spread === -1.0)
+    assert(BenchMath.timed("[spec]")(throw new RuntimeException("x")) === -1.0)
+  }
+
+  test("loadavg falls back to -1 when the load file cannot be read") {
+    assert(BenchMath.loadavg("/nonexistent/loadavg") === -1.0)
+  }
 }

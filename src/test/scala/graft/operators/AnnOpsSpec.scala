@@ -11,14 +11,18 @@ class AnnOpsSpec extends SparkSpec {
     val inMemory = AnnOps.q56AnnIvf.fn(spark, sf).collect()
 
     val staging = java.nio.file.Files.createTempDirectory("graft-ivf").toString
-    spark.conf.set("spark.graft.ann.stagingDir", staging)
+    spark.conf.set("spark.graft.stagingDir", staging)
     try {
       val stagedDf = AnnOps.q56AnnIvf.fn(spark, sf)
       val staged = stagedDf.collect()
       assert(staged.map(_.toString).toSeq === inMemory.map(_.toString).toSeq)
 
-      // the index landed as one directory per inverted list
-      val cellDirs = new java.io.File(s"$staging/ivf_index").listFiles()
+      // the index landed under a fresh tracked directory, one
+      // subdirectory per inverted list
+      val indexDirs = new java.io.File(staging).listFiles()
+        .filter(f => f.isDirectory && f.getName.startsWith("ivf_index_"))
+      assert(indexDirs.length === 1, indexDirs.map(_.getName).mkString(","))
+      val cellDirs = indexDirs.head.listFiles()
         .filter(f => f.isDirectory && f.getName.startsWith("cell="))
       assert(cellDirs.length > 4, s"expected >4 cell dirs, got ${cellDirs.length}")
 
@@ -41,7 +45,12 @@ class AnnOpsSpec extends SparkSpec {
         s"no partition filter on cell: ${scan.partitionFilters}")
       assert(scan.selectedPartitions.partitionCount === 4, // NProbe of 16 cells
         s"scan read ${scan.selectedPartitions.partitionCount} partitions, wanted 4")
-    } finally spark.conf.unset("spark.graft.ann.stagingDir")
+
+      // Staging owns the index: cleanup leaves nothing under the root
+      graft.Staging.cleanup(spark)
+      val left = new java.io.File(staging).listFiles().filter(_.isDirectory)
+      assert(left.isEmpty, s"staged dirs left: ${left.map(_.getName).mkString(",")}")
+    } finally spark.conf.unset("spark.graft.stagingDir")
   }
 
   test("multiProbeBuckets: own bucket first, flips ordered by ascending margin") {

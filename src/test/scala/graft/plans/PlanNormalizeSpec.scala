@@ -28,6 +28,8 @@ class PlanNormalizeSpec extends AnyFunSuite {
   test("lambda addresses are replaced") {
     val s = n("udf(Lambda$3412/0x00007f3c5d2@4f2a1b33)")
     assert(!s.matches(".*0x[0-9a-f]+.*"), s)
+    // the decimal form some JVMs print
+    assert(n("udf(Lambda$12/1234567890@1a2b3c)") === "udf(LAMBDA)")
   }
 
   test("idempotent") {
